@@ -490,7 +490,6 @@ def run_sessions(ctx: Context) -> dict:
                     ctx.tracer.trace_id = op_id
                     spark.sparkContext.setJobGroup(f"op-{op_id}", op["kind"])
                     ctx.in_op = True
-                    ctx.py4j_calls = 0
                 t0 = time.perf_counter()
                 try:
                     if ctx.trace:
@@ -516,7 +515,7 @@ def run_sessions(ctx: Context) -> dict:
                 if ctx.trace:
                     layer_ops.append(_session_op_layers(
                         ctx, spark, op_id, rec, before, after, out,
-                        driver_counter.calls - drv_before, last_exec, eng))
+                        driver_counter.calls - drv_before, last_exec))
                     last_exec = sparkstats.last_execution_id(spark)
             timed_wall += time.perf_counter() - t_sess
             cpu_s += engine_cpu.read() - cpu_sess
@@ -562,7 +561,7 @@ def _release_engine(eng) -> None:
 
 
 def _session_op_layers(ctx, spark, op_id, rec, before, after, out,
-                       driver_calls, last_exec, eng) -> dict:
+                       driver_calls, last_exec) -> dict:
     import sparkstats
 
     summ = ctx.tracer.op_summary(op_id)
@@ -851,7 +850,6 @@ def _pipeline_layers(ctx, ops, spark, result) -> dict:
         lay[f"{fam}.build_s"] = b
         lay[f"{fam}.exec_s"] = e
     _add_common_trace(ctx, lay, ops, result)
-    lay["sources.load_s"] = result["load_s"]
     return lay
 
 
