@@ -7,11 +7,11 @@ driver test data (TPC-H-like star schema, an ``events`` stream, a
 ``documents`` corpus and an ``embeddings`` table), so the registry
 builders and their DuckDB oracles run on them unchanged.
 
-``topic_p`` adds the session vocabulary: each topic word lands in a
-document with that probability.  The base corpus vocabulary is so
+``topic_p`` adds the session vocabulary: each topic word lands in that
+share of the documents, exactly.  The base corpus vocabulary is so
 dense that every base word matches ~80% of the documents; topic words
-give NL filters a selectivity near ``topic_p``, which keeps the LLM
-work per filter the same from seed to seed.
+give NL filters a selectivity of ``topic_p``, which keeps the LLM work
+per filter the same from seed to seed.
 """
 
 from __future__ import annotations
@@ -59,20 +59,21 @@ def documents(rng: np.random.Generator, n: int, topic_p: float) -> pa.Table:
     texts = []
     for i in range(n):
         k = int(rng.integers(10, 101))
-        toks = list(words[rng.integers(0, len(words), k)])
-        if topic_p:
-            for w in TOPIC_WORDS:
-                if rng.random() < topic_p:
-                    toks.insert(int(rng.integers(0, len(toks) + 1)), w)
-        texts.append(" ".join(toks))
+        texts.append(list(words[rng.integers(0, len(words), k)]))
     # near duplicates (an earlier document plus a marker word) and a
     # few exact copies, so the dedup operators find pairs
     for i in range(1, n):
         r = rng.random()
         if r < 0.05:
-            texts[i] = texts[int(rng.integers(0, i))] + " dup"
+            texts[i] = texts[int(rng.integers(0, i))] + ["dup"]
         elif r < 0.052:
-            texts[i] = texts[int(rng.integers(0, i))]
+            texts[i] = list(texts[int(rng.integers(0, i))])
+    # each topic word in exactly round(topic_p * n) documents, so every
+    # topic filter keeps the same number of rows whatever the seed
+    for w in TOPIC_WORDS if topic_p else ():
+        for i in rng.choice(n, size=round(topic_p * n), replace=False):
+            texts[i].insert(int(rng.integers(0, len(texts[i]) + 1)), w)
+    texts = [" ".join(t) for t in texts]
     lang = rng.choice(LANGS, n, p=LANG_P)
     return pa.table({
         "doc_id": pa.array(np.arange(n), pa.int64()),

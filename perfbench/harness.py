@@ -16,6 +16,7 @@ import subprocess
 import sys
 import time
 
+import churn
 import datagen
 import oracle
 import sessions
@@ -23,24 +24,25 @@ import sysinfo
 from stats import error_rate, median, percentile, samples_beyond, tail_rule
 from tracing import Tracer
 
-SETUP_REPS = 3
 LLM_LATENCY_S = 0.010
 SESSION_SF = 0.01
 PIPELINE_SF = 0.01
 
-# Registry rows of the pipeline mix: one per package family of the
-# bench's compact headline, cheap enough that a whole pass fits a run.
-# Each is a builder from ``__spark_entry__.queries()`` with a DuckDB
-# oracle in ``__spark_entry__.oracle_sql()``.
+# Registry rows of the pipeline mix: together they call into every
+# package family.  Each is a builder from ``__spark_entry__.queries()``
+# with a DuckDB oracle in ``__spark_entry__.oracle_sql()``, cheap
+# enough that a pass fits a run.
 PIPELINE_ROWS = (
-    "pricing_summary",            # TPC-H aggregate
-    "cdc_upsert_customers",       # functions.cdc
+    "keyword_filter_or",          # operators.deterministic
+    "asof_join_events",           # operators.relational
     "sem_filter",                 # operators.semantic, stub LLM
     "text_profile",               # functions.text
     "dedup_exact",                # functions.dedup
+    "lsh_topk",                   # functions.similarity
     "pagerank_suppliers",         # functions.graph
-    "anomaly_events",             # functions.timeseries
     "quantile_state_orders",      # functions.incremental
+    "anomaly_events",             # functions.timeseries
+    "cdc_upsert_customers",       # functions.cdc
 )
 
 FAMILIES = (
@@ -50,49 +52,9 @@ FAMILIES = (
     "functions.cdc",
 )
 
-PER_LAYER = (
-    "engine.decompose_s", "engine.plan_filter_s",
-    "plans.memory.probe_s", "plans.memory.probe_llm_calls",
-    "plans.memory.hit_ratio", "plans.memory.subset_ratio",
-    "plans.memory.evictions", "plans.memory.cached_mb",
-    "plans.planner.inject_s", "plans.planner.eager_jobs",
-    "plans.planner.topk_s", "plans.executor.build_s",
-    "plans.rollup.roll_up_s", "plans.rollup.drill_down_s",
-    "llm.requests", "llm.cache_hit_ratio", "llm.driver_calls",
-    "llm.worker_calls", "llm.backend_busy_s", "llm.inflight_mean",
-    "llm.pipelining_ratio", "llm.calls_per_op",
-    "spark.exec_s", "spark.planning_ms", "spark.jobs", "spark.stages",
-    "spark.tasks", "spark.executor_run_s", "spark.shuffle_write_mb",
-    "spark.input_mb", "spark.spill_mb", "spark.python_udf_s",
-    "spark.persisted_rdds",
-    "driver.build_s", "driver.py4j_calls", "driver.eager_jobs",
-    *[f"{f}.{k}" for f in FAMILIES for k in ("build_s", "exec_s")],
-    "sources.load_s",
-    "ops.fresh_p50_s", "ops.refine_p50_s", "ops.analyze_p50_s",
-    "ops.hit_p50_s",
-    "wall.setup_s", "wall.latency_p50_s", "wall.latency_p90_s", "wall.ops_per_s",
-    "mem.peak_rss_mb", "mem.retained_mb",
-    "trace.overhead_per_op_s", "trace.self_time_gap_s",
-)
-
-END_TO_END = ("setup_s", "cpu_s_per_op", "llm_calls_per_op")
-
-PER_LAYER_UNITS = {
-    "probe_llm_calls": "calls/op", "hit_ratio": "ratio",
-    "subset_ratio": "ratio", "evictions": "count/op", "cached_mb": "MB",
-    "eager_jobs": "jobs/op", "requests": "req/op", "cache_hit_ratio": "ratio",
-    "driver_calls": "calls/op", "worker_calls": "calls/op",
-    "inflight_mean": "requests", "pipelining_ratio": "ratio",
-    "calls_per_op": "calls/op", "planning_ms": "ms", "jobs": "jobs/op",
-    "stages": "stages/op", "tasks": "tasks/op", "shuffle_write_mb": "MB/op",
-    "input_mb": "MB/op", "spill_mb": "MB/op", "persisted_rdds": "count",
-    "py4j_calls": "calls/op", "ops_per_s": "ops/s", "peak_rss_mb": "MB",
-    "retained_mb": "MB",
-}
-
-
-def per_layer_unit(name: str) -> str:
-    return PER_LAYER_UNITS.get(name.rsplit(".", 1)[1], "s")
+# op kinds with a per-kind median among the per-layer metrics
+KINDS = ("fresh", "refine", "analyze", "hit", "churn_fresh", "churn_hit",
+         "rehit", "checkpoint", "reopen")
 
 
 def log(msg: str) -> None:
@@ -143,17 +105,9 @@ class Stopwatch:
         return time.perf_counter() - self.wall0, sysinfo.tree_cpu_s() - self.cpu0
 
 
-def _setup_summary(setups, warm, gen_s) -> dict:
-    """Set-up cost: the median of the repeated set-ups plus the one-time
-    warm-up, in CPU seconds and in wall seconds."""
-    out = {
-        "cpu_s": median([c for _, c in setups]) + warm[1],
-        "wall_s": median([w for w, _ in setups]) + warm[0],
-        "reps_wall_s": [round(w, 2) for w, _ in setups],
-        "reps_cpu_s": [round(c, 2) for _, c in setups],
-        "warm_wall_s": round(warm[0], 2), "warm_cpu_s": round(warm[1], 2),
-        "data_s": round(gen_s, 2),
-    }
+def _setup_summary(sw: Stopwatch, load_s: float, gen_s: float) -> dict:
+    wall, cpu = sw.read()
+    out = {"cpu_s": cpu, "wall_s": wall, "load_s": load_s, "data_s": gen_s}
     log(f"set-up {json.dumps(out)}")
     return out
 
@@ -167,23 +121,17 @@ def _bind_llm(builder, llm_factory):
 
 
 class EngineCpu:
-    """CPU seconds of the engine's work: every process of the tree but
-    the JVM from /proc, plus the JVM's Java threads.  The JVM's JIT and
-    GC threads are left out: in a window of a few seconds right after
-    warm-up their share swings with compile-queue timing (one measured
-    session window: 10.5 of the JVM's 16 CPU-s)."""
+    """CPU seconds of the engine's work, from /proc: every process of
+    the tree, less the JVM's JIT-compiler, GC and VM threads.  In a
+    window of a few seconds right after warm-up their share swings
+    with compile-queue timing (one measured session window: 10.5 of
+    the JVM's 16 CPU-s)."""
 
     def __init__(self, spark):
-        import sparkstats
-
-        self.spark = spark
         self.jvm_pid = spark.sparkContext._gateway.proc.pid
-        self._jvm_cpu = sparkstats.jvm_thread_cpu_s
 
     def read(self) -> float:
-        procs = sysinfo.tree_cpu_by_process()
-        return (sum(v for pid, v in procs.items() if pid != self.jvm_pid)
-                + self._jvm_cpu(self.spark))
+        return sysinfo.tree_cpu_s() - sysinfo.jvm_internal_cpu_s(self.jvm_pid)
 
 
 def settle(spark) -> None:
@@ -208,12 +156,21 @@ def start_spark(ctx: Context):
             "spark.ui.showConsoleProgress": "false",
             "spark.local.dir": local,
             "spark.sql.warehouse.dir": os.path.join(ctx.work, "warehouse"),
-            "spark.driver.extraJavaOptions": f"-Djava.io.tmpdir={tmp}",
+            # a fixed set of JIT-compiler threads: one that exits
+            # would take its CPU time out of the per-thread sum that
+            # EngineCpu subtracts from the JVM's total
+            "spark.driver.extraJavaOptions":
+                f"-Djava.io.tmpdir={tmp} -XX:-UseDynamicNumberOfCompilerThreads",
         },
     )
     spark.sparkContext.setLogLevel("ERROR")
     ctx.spark = spark
     return spark
+
+
+def dir_bytes(path: str) -> int:
+    return sum(os.path.getsize(os.path.join(d, f))
+               for d, _, files in os.walk(path) for f in files)
 
 
 # ---------------------------------------------------------------------------
@@ -242,7 +199,7 @@ def _count_py4j(ctx: Context) -> None:
         cls.send_command = counted
 
 
-def _patch_sessions(ctx: Context, probe_outcomes: dict, llm_calls) -> None:
+def _patch_engine(ctx: Context, probe_outcomes: dict, llm_calls) -> None:
     import semantic_olap_spark.engine as engine
     import semantic_olap_spark.plans.executor as executor
     import semantic_olap_spark.plans.memory as memory
@@ -267,14 +224,26 @@ def _patch_sessions(ctx: Context, probe_outcomes: dict, llm_calls) -> None:
     tr._undo.append((memory.CubeMemory, "get_current_node", orig_probe))
     memory.CubeMemory.get_current_node = tr.wrap(probe, "plans.memory.probe")
 
+    # evictions: node releases by the cache budget during an op
+    orig_evict = memory.CubeMemory.__dict__["_evict"]
     orig_release = memory.CubeNode.__dict__["release"]
+    evicting = []
+
+    def evict(self):
+        evicting.append(True)
+        try:
+            return orig_evict(self)
+        finally:
+            evicting.pop()
 
     def release(self):
-        if ctx.in_op:
+        if ctx.in_op and evicting:
             ctx.evictions += 1
         return orig_release(self)
 
-    tr._undo.append((memory.CubeNode, "release", orig_release))
+    tr._undo += [(memory.CubeMemory, "_evict", orig_evict),
+                 (memory.CubeNode, "release", orig_release)]
+    memory.CubeMemory._evict = evict
     memory.CubeNode.release = release
 
     orig_inject = engine.inject_sub_plans
@@ -299,6 +268,9 @@ def _patch_sessions(ctx: Context, probe_outcomes: dict, llm_calls) -> None:
     tr.patch_function_everywhere(executor.run_filter, "plans.executor.build")
     tr.patch_function_everywhere(engine.roll_up, "plans.rollup.roll_up")
     tr.patch_function_everywhere(engine.drill_down, "plans.rollup.drill_down")
+    tr.patch_function_everywhere(memory.save_cube_incremental,
+                                 "plans.memory.checkpoint")
+    tr.patch_function_everywhere(memory.load_cube, "plans.memory.load")
 
 
 def _family_functions(family: str):
@@ -313,13 +285,10 @@ def _family_functions(family: str):
 
 
 def _patch_pipeline(ctx: Context) -> None:
-    import semantic_olap_spark.sources.loaders as loaders
-
-    tr = ctx.tracer
     for fam in FAMILIES:
         for fn in _family_functions(fam):
-            tr.patch_function_everywhere(fn, fam)
-    tr.patch_function_everywhere(loaders.load_table, "sources.load")
+            ctx.tracer.patch_function_everywhere(fn, fam)
+    _count_py4j(ctx)
 
 
 class BackendMeter:
@@ -362,17 +331,20 @@ class BackendMeter:
     def predict_batch(self, batch):
         return [self.predict(p) for p in batch]
 
-    def snapshot(self) -> tuple[int, float, float, float]:
+    def snapshot(self) -> dict:
         with self.lock:
             self._tick(0)
-            return self.calls, self.busy_s, self.inflight_area, self.busy_wall
+            return {"llm_endpoint_calls": self.calls, "llm_busy_s": self.busy_s,
+                    "llm_area": self.inflight_area, "llm_busy_wall": self.busy_wall}
 
 
 class DriverCounter:
-    """Factory wrapper counting LLM requests issued in the driver
+    """Factory wrapper counting LLM backend calls made in the driver
     process.  Executor processes unpickle their own copy, whose counts
     stay in that process, so only driver-side planning calls land
-    here."""
+    here.  A prompt cache the factory puts in front of its backend
+    stays in front, so cost tracking still tells requests from
+    backend calls."""
 
     def __init__(self, factory):
         self.factory = factory
@@ -382,23 +354,172 @@ class DriverCounter:
         return {"factory": self.factory, "calls": 0}
 
     def __call__(self):
-        inner = self.factory()
+        from semantic_olap_spark.llm.client import CachingLLM
+
+        llm = self.factory()
         counter = self
 
         class Counted:
+            def __init__(self, inner):
+                self.inner = inner
+
             def predict(self, prompt):
                 counter.calls += 1
-                return inner.predict(prompt)
+                return self.inner.predict(prompt)
 
             def predict_batch(self, batch):
                 counter.calls += len(batch)
-                return inner.predict_batch(batch)
+                return self.inner.predict_batch(batch)
 
-        return Counted()
+        if isinstance(llm, CachingLLM):
+            llm.inner = Counted(llm.inner)
+            return llm
+        return Counted(llm)
 
 
 # ---------------------------------------------------------------------------
-# olap_sessions
+# the timed closed loop
+
+
+class Loop:
+    """Runs and records the timed ops of one run.
+
+    ``counters()`` returns cumulative counts (LLM calls and the like);
+    each op record holds their change over the op.  An op is
+    ``build()`` (the call into the engine) plus forcing the frame it
+    returns; ``build`` returns ``None`` for an op with no result, such
+    as a checkpoint.  Engine CPU is read around each op, outside its
+    timing.
+    """
+
+    def __init__(self, ctx: Context, spark, counters):
+        import sparkstats
+
+        self.ctx = ctx
+        self.spark = spark
+        self.counters = counters
+        self.ops: list[dict] = []
+        self.attempted = self.failed = self.mismatched = 0
+        self.op_id = 0
+        self.cpu_s = 0.0
+        self.engine_cpu = EngineCpu(spark)
+        self.last_exec = sparkstats.last_execution_id(spark) if ctx.trace else None
+
+    def timed_s(self) -> float:
+        return sum(o["latency_s"] for o in self.ops)
+
+    def op(self, kind: str, phase: str, build, build_span: str = "engine.run"):
+        """Run one op; returns ``(record, frame)``, or ``(None, None)``
+        when it failed."""
+        ctx, sc = self.ctx, self.spark.sparkContext
+        self.attempted += 1
+        self.op_id += 1
+        group = f"op-{self.op_id}"
+        c0 = self.counters()
+        cpu0 = self.engine_cpu.read()
+        py4j0 = ctx.py4j_calls
+        out = None
+        try:
+            if ctx.trace:
+                ctx.tracer.trace_id = self.op_id
+                sc.setJobGroup(f"{group}-build", kind)
+                ctx.in_op = True
+                t0 = time.perf_counter()
+                with ctx.tracer.span("op"):
+                    with ctx.tracer.span(build_span):
+                        out = build()
+                    py4j_build = ctx.py4j_calls - py4j0
+                    sc.setJobGroup(group, kind)
+                    if out is not None:
+                        with ctx.tracer.span("spark.exec"):
+                            force(out)
+            else:
+                t0 = time.perf_counter()
+                out = build()
+                if out is not None:
+                    force(out)
+            lat = time.perf_counter() - t0
+        except Exception as exc:  # noqa: BLE001 - a failed op is counted
+            self.failed += 1
+            log(f"op failed: {kind} {phase}: {exc!r}")
+            return None, None
+        finally:
+            ctx.in_op = False
+        cpu = self.engine_cpu.read() - cpu0
+        self.cpu_s += cpu
+        c1 = self.counters()
+        rec = {"kind": kind, "phase": phase, "latency_s": lat, "cpu_s": cpu,
+               **{k: c1[k] - c0[k] for k in c1}}
+        if ctx.trace:
+            self._trace(rec, out, group, py4j_build)
+        self.ops.append(rec)
+        return rec, out
+
+    def _trace(self, rec, out, group, py4j_build) -> None:
+        import sparkstats
+
+        spark, ctx = self.spark, self.ctx
+        build = sparkstats.group_stage_totals(spark, f"{group}-build")
+        execd = sparkstats.group_stage_totals(spark, group)
+        rec["summary"] = ctx.tracer.op_summary(self.op_id)
+        rec["spark"] = {k: build[k] + execd[k] for k in execd}
+        rec["build_jobs"] = build["jobs"]
+        rec["py4j_build"] = py4j_build
+        rec["inject_jobs"] = len(sparkstats.group_jobs(spark, f"{group}-build-inject"))
+        rec["python_udf_s"] = sparkstats.python_udf_s(spark, self.last_exec)
+        rec["planning_ms"] = sparkstats.planning_ms(out) if out is not None else None
+        rec["evictions"] = ctx.evictions
+        rec["cached_mb"] = _cached_mb(spark)
+        ctx.evictions = 0
+        self.last_exec = sparkstats.last_execution_id(spark)
+
+    def check(self, what: str, ok: bool, why: str, n_ops: int = 1) -> None:
+        """Record an oracle verdict on ``n_ops`` ops."""
+        if not ok:
+            self.mismatched += n_ops
+            log(f"oracle mismatch on {what}: {why}")
+
+
+def _peak_rss(ctx: Context):
+    """A started RSS sampler in a traced run: its /proc scans every
+    0.25 s would count in the engine CPU of an untraced run."""
+    if not ctx.trace:
+        return None
+    rss = sysinfo.PeakRss()
+    rss.start()
+    return rss
+
+
+def _cached_mb(spark) -> float:
+    infos = spark.sparkContext._jsc.sc().getRDDStorageInfo()
+    return sum(i.memSize() + i.diskSize() for i in infos) / 2**20
+
+
+def _leak_check(spark, baseline: int, persisted: list[int], where: str) -> None:
+    import sparkstats
+
+    persisted.append(sparkstats.persisted_rdds(spark))
+    if persisted[-1] > baseline:
+        log(f"persisted RDDs grew {where}: baseline {baseline}, "
+            f"now {persisted[-1]}")
+
+
+# ---------------------------------------------------------------------------
+# olap_sessions: progressive sessions, then a churn round
+
+
+def _release_engine(eng) -> None:
+    for node in eng.memory.nodes.values():
+        node.release()
+
+
+def _lattice_kind(eng, query: str) -> str:
+    """``churn_hit``, ``rehit`` or ``churn_fresh``: whether the lattice
+    holds a node for ``query`` and whether its frame is cached."""
+    for node in eng.memory.nodes.values():
+        if node.query == query:
+            return "churn_hit" if node.df.is_cached else "rehit"
+    return "churn_fresh"
 
 
 def run_sessions(ctx: Context) -> dict:
@@ -411,255 +532,162 @@ def run_sessions(ctx: Context) -> dict:
                             columns=["text", "n_chars"])
     stats = sessions.topic_stats(zip(docs_pa.column("text").to_pylist(),
                                      docs_pa.column("n_chars").to_pylist()))
-    n_max = 1 + max(4, int(ctx.seconds // 3))
+    # each unit takes two fresh topic words for the session and two for
+    # the churn round, so the vocabulary caps the units of a run
+    n_max = min(1 + max(4, int(ctx.seconds // 3)),
+                (len(datagen.TOPIC_WORDS) - churn.CACHE_NODES) // 2 + 1)
     scripts = sessions.generate(ctx.seed, stats, n_max)
-    warm, timed_scripts = scripts[0], scripts[1:]
+    rounds = churn.generate(ctx.seed, stats, n_max)
     duck = oracle.SessionOracle(os.path.join(data, "documents.parquet"))
+    cube = os.path.join(ctx.work, "cube")
     gen_s = time.perf_counter() - t_proc
 
     from semantic_olap_spark import OlapEngine, release_caches
-    from semantic_olap_spark.llm.client import StubLLM
+    from semantic_olap_spark.llm.client import StubLLM, wrap_cost_tracking
     from semantic_olap_spark.llm.http_client import http_llm_factory
     from semantic_olap_spark.llm.mock_server import LatencyLLM, MockOpenAIServer
+    import semantic_olap_spark.plans.memory as memory
     from semantic_olap_spark.sources.loaders import load_table, with_olap_id
     import sparkstats
 
     meter = BackendMeter(LatencyLLM(StubLLM(), LLM_LATENCY_S))
     srv = MockOpenAIServer(backend=meter)
     try:
-        factory = http_llm_factory(srv.base_url, model="perfbench",
-                                   concurrency=1)
-        driver_counter = DriverCounter(factory)
-        llm_factory = driver_counter if ctx.trace else factory
-
-        # -- set-up, several times; the first also starts the session
-        setups, load_times = [], []
-        spark = None
-        docs = None
-        for rep in range(SETUP_REPS):
-            sw = Stopwatch()
-            if spark is None:
-                spark = start_spark(ctx)
-            if docs is not None:
-                docs.unpersist()
-            tl = time.perf_counter()
-            docs = with_olap_id(load_table(spark, data, "documents"),
-                                order_by=["doc_id"]).cache()
-            docs.count()
-            load_times.append(time.perf_counter() - tl)
-            OlapEngine(docs, llm_factory=llm_factory, track_costs=True)
-            setups.append(sw.read())
-        # one untimed session: both filters, every analysis kind
         sw = Stopwatch()
-        eng = OlapEngine(docs, llm_factory=llm_factory, track_costs=True)
-        for query in sessions.warmup_queries(warm):
+        spark = start_spark(ctx)
+        tl = time.perf_counter()
+        docs = with_olap_id(load_table(spark, data, "documents")).cache()
+        docs.count()
+        load_s = time.perf_counter() - tl
+        endpoint = http_llm_factory(srv.base_url, model="perfbench", concurrency=1)
+        session_counter, churn_counter = DriverCounter(endpoint), DriverCounter(StubLLM)
+        session_llm = session_counter if ctx.trace else endpoint
+        # churn engines use the in-process stub; these accumulators
+        # count its calls across the writer and every reopened reader
+        churn_llm, churn_stats = wrap_cost_tracking(
+            spark, churn_counter if ctx.trace else StubLLM)
+
+        def llm_calls() -> int:
+            return meter.calls + churn_stats.backend_calls
+
+        def counters() -> dict:
+            return {"llm_calls": llm_calls(), **meter.snapshot(),
+                    "llm_driver_calls": session_counter.calls + churn_counter.calls}
+
+        # -- warm-up: the untimed session's ops up to its second fresh
+        # filter, then the churn engine's first round
+        eng = OlapEngine(docs, llm_factory=session_llm, track_costs=True)
+        for query in sessions.warmup_queries(scripts[0]):
             force(eng.run(query))
         _release_engine(eng)
+        writer = OlapEngine(docs, llm_factory=churn_llm, track_costs=True,
+                            max_cached_nodes=churn.CACHE_NODES)
+        for op in rounds[0]:
+            if op["kind"] == "reopen":
+                reader = OlapEngine.load(spark, cube, llm_factory=churn_llm,
+                                         max_cached_nodes=churn.CACHE_NODES)
+                force(reader.run(op["query"]))
+                _release_engine(reader)
+            else:
+                force(writer.run(op["query"]))
+                memory.save_cube_incremental(writer.memory, cube)
         release_caches()
-        setup = _setup_summary(setups, sw.read(), gen_s)
-        baseline_persisted = sparkstats.persisted_rdds(spark)
-
+        settle(spark)
+        baseline = sparkstats.persisted_rdds(spark)
         if ctx.trace:
             probe_outcomes = {"probes": 0, "equal": 0, "subset": 0, "llm_calls": 0}
-            _patch_sessions(ctx, probe_outcomes, lambda: srv.state.requests)
-            last_exec = sparkstats.last_execution_id(spark)
+            _patch_engine(ctx, probe_outcomes, llm_calls)
+        loop = Loop(ctx, spark, counters)
+        setup = _setup_summary(sw, load_s, gen_s)
 
-        ops, persisted, layer_ops = [], [], []
-        attempted = failed = mismatched = 0
-        timed_wall = 0.0
-        settle(spark)
-        engine_cpu = EngineCpu(spark)
-        cpu_s = 0.0
-        retained = 0.0
-        rss = sysinfo.PeakRss()
-        rss.start()
-        op_id = 0
-        for script in timed_scripts:
-            if timed_wall >= ctx.seconds:
-                break
-            cpu_sess = engine_cpu.read()
-            t_sess = time.perf_counter()
-            eng = OlapEngine(docs, llm_factory=llm_factory, track_costs=True)
-            outs = []
-            for op in script:
-                attempted += 1
-                op_id += 1
-                before = meter.snapshot()
-                drv_before = driver_counter.calls
-                if ctx.trace:
-                    ctx.tracer.trace_id = op_id
-                    spark.sparkContext.setJobGroup(f"op-{op_id}", op["kind"])
-                    ctx.in_op = True
-                t0 = time.perf_counter()
-                try:
-                    if ctx.trace:
-                        with ctx.tracer.span("op"):
-                            out = eng.run(op["query"])
-                            with ctx.tracer.span("spark.exec"):
-                                force(out)
-                    else:
-                        out = eng.run(op["query"])
-                        force(out)
-                except Exception as exc:  # noqa: BLE001 - a failed op is counted
-                    failed += 1
-                    log(f"op failed: {op['query']!r}: {exc!r}")
-                    continue
-                finally:
-                    ctx.in_op = False
-                lat = time.perf_counter() - t0
-                after = meter.snapshot()
-                rec = {"kind": op["kind"], "latency_s": lat,
-                       "llm_calls": after[0] - before[0]}
-                ops.append(rec)
-                outs.append((op, out))
-                if ctx.trace:
-                    layer_ops.append(_session_op_layers(
-                        ctx, spark, op_id, rec, before, after, out,
-                        driver_counter.calls - drv_before, last_exec))
-                    last_exec = sparkstats.last_execution_id(spark)
-            timed_wall += time.perf_counter() - t_sess
-            cpu_s += engine_cpu.read() - cpu_sess
-            # -- outside the timed window: oracle, retained memory (the
-            # lattice is still held, the op results are dropped), cleanup
-            for op, out in outs:
-                ok, why = duck.check(op, out)
-                if not ok:
-                    mismatched += 1
-                    log(f"oracle mismatch on {op['query']!r}: {why}")
-            outs = out = None
-            retained = max(retained, sparkstats.jvm_retained_mb(spark))
-            if ctx.trace:
-                stats_now = eng.statistics()
-                layer_ops.append({"llm_session": stats_now})
-            _release_engine(eng)
+        persisted, cost = [], {"llm_requests": -churn_stats.requests,
+                               "llm_backend_calls": -churn_stats.backend_calls}
+        stored = {"bytes": 0, "query_ops": 0}
+        rss = _peak_rss(ctx)
+        unit = 1
+        while loop.timed_s() < ctx.seconds and unit < n_max:
+            _timed_session(ctx, loop, docs, session_llm, scripts[unit], duck, cost)
             release_caches()
-            persisted.append(sparkstats.persisted_rdds(spark))
-        peak = rss.stop()
-        leak = [p for p in persisted if p > baseline_persisted]
-        if leak:
-            log(f"persisted RDDs grew across sessions: baseline "
-                f"{baseline_persisted}, after each session {persisted}")
-        result = {
-            "ops": ops, "attempted": attempted, "failed": failed,
-            "mismatched": mismatched, "setup": setup,
-            "timed_wall_s": timed_wall, "peak_rss_mb": peak, "cpu_s": cpu_s,
-            "retained_mb": retained, "cleanup_ok": not leak, "persisted_rdds": persisted,
-            "load_s": median(load_times),
-        }
+            _leak_check(spark, baseline, persisted, "after a session")
+            _timed_round(ctx, loop, writer, churn_llm, rounds[unit], duck,
+                         cube, stored)
+            release_caches()
+            _leak_check(spark, baseline, persisted, "after a churn round")
+            unit += 1
+        peak = rss.stop() if rss else None
+        cost["llm_requests"] += churn_stats.requests
+        cost["llm_backend_calls"] += churn_stats.backend_calls
+        retained = sparkstats.jvm_retained_mb(spark) if ctx.trace else None
+        _release_engine(writer)
         if ctx.trace:
             ctx.tracer.restore()
-            result["layers"] = _session_layers(ctx, layer_ops, probe_outcomes,
-                                               persisted, result)
-        return result
+        return {
+            "loop": loop, "setup": setup, "peak_rss_mb": peak,
+            "retained_mb": retained, "persisted_rdds": persisted,
+            "cleanup_ok": max(persisted, default=0) <= baseline,
+            "probes": probe_outcomes if ctx.trace else None,
+            "llm_cost": cost, "stored": stored,
+        }
     finally:
         srv.shutdown()
 
 
-def _release_engine(eng) -> None:
-    for node in eng.memory.nodes.values():
-        node.release()
+def _timed_session(ctx, loop, docs, llm, script, duck, cost) -> None:
+    from semantic_olap_spark import OlapEngine
+
+    eng = OlapEngine(docs, llm_factory=llm, track_costs=True)
+    outs = []
+    for op in script:
+        rec, out = loop.op(op["kind"], "sessions",
+                           lambda q=op["query"]: eng.run(q))
+        if rec is not None:
+            outs.append((op, out))
+    # outside the timed window: oracle, then cleanup
+    for op, out in outs:
+        loop.check(repr(op["query"]), *duck.check(op, out))
+    stats_now = eng.statistics()
+    cost["llm_requests"] += stats_now["llm_requests"]
+    cost["llm_backend_calls"] += stats_now["llm_backend_calls"]
+    _release_engine(eng)
 
 
-def _session_op_layers(ctx, spark, op_id, rec, before, after, out,
-                       driver_calls, last_exec) -> dict:
-    import sparkstats
+def _timed_round(ctx, loop, writer, llm, script, duck, cube, stored) -> None:
+    """One churn round: each query op followed by a checkpoint, then a
+    reader reopens the checkpoint and probes it once."""
+    from semantic_olap_spark import OlapEngine
+    import semantic_olap_spark.plans.memory as memory
 
-    summ = ctx.tracer.op_summary(op_id)
-    grp = sparkstats.group_stage_totals(spark, f"op-{op_id}")
-    calls = after[0] - before[0]
-    busy = after[1] - before[1]
-    area = after[2] - before[2]
-    busy_wall = after[3] - before[3]
-    d = {
-        "kind": rec["kind"], "latency_s": rec["latency_s"], "summary": summ,
-        "spark": grp, "llm_backend_calls": calls, "llm_busy_s": busy,
-        "llm_inflight_mean": (area / busy_wall) if busy_wall > 0 else 0.0,
-        "llm_driver_calls": driver_calls,
-        "pipelining_ratio": calls * LLM_LATENCY_S / rec["latency_s"],
-        "python_udf_s": sparkstats.python_udf_s(spark, last_exec),
-        "planning_ms": sparkstats.planning_ms(out),
-        "evictions": ctx.evictions,
-        "inject_jobs": len(sparkstats.group_jobs(spark, f"op-{op_id}-inject")),
-        "cached_mb": _cached_mb(spark),
-    }
-    ctx.evictions = 0
-    return d
+    for op in script:
+        if op["kind"] == "reopen":
+            opened = []
 
+            def reopen(q=op["query"]):
+                opened.append(OlapEngine.load(
+                    ctx.spark, cube, llm_factory=llm,
+                    max_cached_nodes=churn.CACHE_NODES))
+                return opened[0].run(q)
 
-def _cached_mb(spark) -> float:
-    infos = spark.sparkContext._jsc.sc().getRDDStorageInfo()
-    return sum(i.memSize() + i.diskSize() for i in infos) / 2**20
-
-
-def _session_layers(ctx, layer_ops, probe_outcomes, persisted, result) -> dict:
-    ops = [o for o in layer_ops if "summary" in o]
-    sess = [o["llm_session"] for o in layer_ops if "llm_session" in o]
-    n = max(len(ops), 1)
-
-    def mean_self(name):
-        return sum(o["summary"].get(name, {}).get("self_s", 0.0) for o in ops) / n
-
-    def mean_total(name):
-        return sum(o["summary"].get(name, {}).get("total_s", 0.0) for o in ops) / n
-
-    requests = sum(s.get("llm_requests", 0) for s in sess)
-    backend = sum(s.get("llm_backend_calls", 0) for s in sess)
-    probes = max(probe_outcomes["probes"], 1)
-    lay = {
-        "engine.decompose_s": mean_total("engine.decompose"),
-        "engine.plan_filter_s": mean_total("engine.plan_filter"),
-        "plans.memory.probe_s": mean_total("plans.memory.probe"),
-        "plans.memory.probe_llm_calls": probe_outcomes["llm_calls"] / n,
-        "plans.memory.hit_ratio": probe_outcomes["equal"] / probes,
-        "plans.memory.subset_ratio": probe_outcomes["subset"] / probes,
-        "plans.memory.evictions": sum(o["evictions"] for o in ops) / n,
-        "plans.memory.cached_mb": median([o["cached_mb"] for o in ops]),
-        "plans.planner.inject_s": mean_total("plans.planner.inject"),
-        "plans.planner.topk_s": mean_total("plans.planner.topk"),
-        "plans.executor.build_s": mean_total("plans.executor.build"),
-        "plans.rollup.roll_up_s": mean_total("plans.rollup.roll_up"),
-        "plans.rollup.drill_down_s": mean_total("plans.rollup.drill_down"),
-        "llm.requests": requests / n,
-        "llm.cache_hit_ratio": (1 - backend / requests) if requests else 0.0,
-        "llm.driver_calls": sum(o["llm_driver_calls"] for o in ops) / n,
-        "llm.backend_busy_s": sum(o["llm_busy_s"] for o in ops) / n,
-        "llm.inflight_mean": median([o["llm_inflight_mean"] for o in ops
-                                     if o["llm_backend_calls"]] or [0.0]),
-        "llm.pipelining_ratio": (
-            sum(o["llm_backend_calls"] for o in ops) * LLM_LATENCY_S
-            / sum(o["latency_s"] for o in ops)),
-        "llm.calls_per_op": sum(o["llm_backend_calls"] for o in ops) / n,
-        "spark.exec_s": mean_total("spark.exec"),
-        "spark.planning_ms": median([o["planning_ms"] for o in ops]),
-        "spark.python_udf_s": sum(o["python_udf_s"] for o in ops) / n,
-        "spark.persisted_rdds": float(persisted[-1]) if persisted else 0.0,
-    }
-    # worker calls: backend calls that did not come from the driver
-    lay["llm.worker_calls"] = max(
-        lay["llm.calls_per_op"] - lay["llm.driver_calls"], 0.0)
-    for key in ("jobs", "stages", "tasks", "executor_run_s",
-                "shuffle_write_mb", "input_mb", "spill_mb"):
-        lay[f"spark.{key}"] = sum(o["spark"][key] for o in ops) / n
-    # eager jobs of planning: jobs not launched by the forcing action
-    lay["plans.planner.eager_jobs"] = sum(o["inject_jobs"] for o in ops) / n
-    _add_common_trace(ctx, lay, ops, result)
-    return lay
-
-
-def _add_common_trace(ctx, lay, ops, result) -> None:
-    gaps = []
-    for o in ops:
-        s = o["summary"]
-        total_self = sum(v["self_s"] for v in s.values())
-        gaps.append(abs(o["latency_s"] - total_self))
-    lay["trace.self_time_gap_s"] = max(gaps) if gaps else 0.0
-    lay["trace.overhead_per_op_s"] = ctx.tracer.overhead_s / max(len(ops), 1)
-    by_kind: dict[str, list[float]] = {}
-    for rec in result["ops"]:
-        by_kind.setdefault(rec["kind"], []).append(rec["latency_s"])
-    for kind in ("fresh", "refine", "analyze", "hit"):
-        lay[f"ops.{kind}_p50_s"] = median(by_kind.get(kind, []))
-    lay["sources.load_s"] = result["load_s"]
+            rec, out = loop.op("reopen", "churn", reopen)
+            if rec is not None:
+                loop.check(f"reopen {op['query']!r}", *duck.check(op, out))
+                want = sorted(n.query for n in writer.memory.nodes.values())
+                got = sorted(n.query for n in opened[0].memory.nodes.values())
+                loop.check("reopened lattice", got == want,
+                           f"{len(got)} node queries, writer has {len(want)}")
+            if opened:
+                _release_engine(opened[0])
+            continue
+        kind = _lattice_kind(writer, op["query"])
+        rec, out = loop.op(kind, "churn", lambda q=op["query"]: writer.run(q))
+        if rec is None:
+            continue
+        loop.check(repr(op["query"]), *duck.check(op, out))
+        out = None
+        before = dir_bytes(cube)
+        if loop.op("checkpoint", "churn",
+                   lambda: memory.save_cube_incremental(writer.memory, cube))[0]:
+            stored["bytes"] += dir_bytes(cube) - before
+            stored["query_ops"] += 1
 
 
 # ---------------------------------------------------------------------------
@@ -677,6 +705,7 @@ def run_pipeline(ctx: Context) -> dict:
 
     import __spark_entry__ as entry
     from semantic_olap_spark import release_caches
+    from semantic_olap_spark.llm.client import default_llm_factory, wrap_cost_tracking
     from semantic_olap_spark.sources.loaders import load_tables
     import sparkstats
 
@@ -686,174 +715,152 @@ def run_pipeline(ctx: Context) -> dict:
     con = duckdb.connect()
     oracle.register_tables(con, data)
 
-    setups, load_times = [], []
-    spark = None
-    for rep in range(SETUP_REPS):
-        sw = Stopwatch()
-        if spark is None:
-            spark = start_spark(ctx)
-        tl = time.perf_counter()
-        spark.catalog.clearCache()
-        tables = load_tables(spark, data)
-        for df in tables.values():
-            df.count()
-        load_times.append(time.perf_counter() - tl)
-        setups.append(sw.read())
+    sw = Stopwatch()
+    spark = start_spark(ctx)
+    tl = time.perf_counter()
+    load_tables(spark, data)  # the warm-up pass touches every table first
+    load_s = time.perf_counter() - tl
     # the stub LLM behind accumulator counters, for the rows that take
     # an LLM factory
-    from semantic_olap_spark.llm.client import default_llm_factory, wrap_cost_tracking
-
     llm_factory, llm_stats = wrap_cost_tracking(spark, default_llm_factory)
     builders = {name: _bind_llm(registry[name], llm_factory) for name in rows}
-    sw = Stopwatch()
+    warm = {}
     for name in rows:  # one untimed pass over every row
+        t0 = time.perf_counter()
         force(builders[name](spark, data))
+        warm[name] = round(time.perf_counter() - t0, 2)
         release_caches()
-    setup = _setup_summary(setups, sw.read(), gen_s)
-
+    log(f"warm-up pass {json.dumps(warm)}")
+    settle(spark)
+    baseline = sparkstats.persisted_rdds(spark)
     if ctx.trace:
         _patch_pipeline(ctx)
-        _count_py4j(ctx)
+    loop = Loop(ctx, spark, lambda: {"llm_calls": llm_stats.requests})
+    setup = _setup_summary(sw, load_s, gen_s)
 
-    ops, layer_ops, last_df = [], [], {}
-    attempted = failed = mismatched = 0
-    timed_wall = 0.0
-    settle(spark)
-    engine_cpu = EngineCpu(spark)
-    cpu_s = 0.0
-    rss = sysinfo.PeakRss()
-    rss.start()
-    op_id = 0
-    while timed_wall < ctx.seconds:
+    last_df, persisted = {}, []
+    requests0, backend0 = llm_stats.requests, llm_stats.backend_calls
+    rss = _peak_rss(ctx)
+    while loop.timed_s() < ctx.seconds:
         order = list(rows)
         rng.shuffle(order)
-        t_pass = time.perf_counter()
         for name in order:
-            attempted += 1
-            op_id += 1
-            cpu_op = engine_cpu.read()
-            t_op = time.perf_counter()
-            try:
-                if ctx.trace:
-                    rec = _traced_pipeline_op(ctx, spark, op_id, name,
-                                              builders[name], data, llm_stats)
-                    df = rec.pop("df")
-                else:
-                    calls0 = llm_stats.requests
-                    t0 = time.perf_counter()
-                    df = builders[name](spark, data)
-                    force(df)
-                    rec = {"kind": name, "latency_s": time.perf_counter() - t0,
-                           "llm_calls": llm_stats.requests - calls0}
-            except Exception as exc:  # noqa: BLE001 - a failed op is counted
-                failed += 1
-                log(f"op failed: {name}: {exc!r}")
-                continue
-            cpu_s += engine_cpu.read() - cpu_op
-            # the CPU reads around the op are not timed
-            t_pass += time.perf_counter() - t_op - rec["latency_s"]
-            ops.append(rec)
-            last_df[name] = df
-            if ctx.trace:
-                layer_ops.append(rec)
-            t_out = time.perf_counter()
+            rec, df = loop.op(name, "pipeline",
+                              lambda b=builders[name]: b(spark, data),
+                              build_span="driver.build")
+            if rec is not None:
+                last_df[name] = df
             release_caches()
-            t_pass += time.perf_counter() - t_out  # cleanup is not timed
-        timed_wall += time.perf_counter() - t_pass
-    peak = rss.stop()
+        _leak_check(spark, baseline, persisted, "after a pass")
+    peak = rss.stop() if rss else None
     if ctx.trace:
         ctx.tracer.restore()
+    cost = {"llm_requests": llm_stats.requests - requests0,
+            "llm_backend_calls": llm_stats.backend_calls - backend0}
     # -- outside the timed window: each row's output against DuckDB
     for name, df in last_df.items():
         ok, why = oracle.pipeline_check(df, oracle.duck_hash(con, oracles[name]))
-        if not ok:
-            n_runs = sum(1 for o in ops if o["kind"] == name)
-            mismatched += n_runs
-            log(f"oracle mismatch on {name}: {why}")
+        loop.check(name, ok, why, sum(1 for o in loop.ops if o["kind"] == name))
         release_caches()
     # what the session holds once the caller has dropped every result
     last_df.clear()
     df = None
-    retained = sparkstats.jvm_retained_mb(spark)
-    result = {
-        "ops": ops, "attempted": attempted, "failed": failed,
-        "mismatched": mismatched, "setup": setup,
-        "timed_wall_s": timed_wall, "peak_rss_mb": peak, "cpu_s": cpu_s,
-        "retained_mb": retained, "cleanup_ok": True,
-        "load_s": median(load_times),
-    }
-    if ctx.trace:
-        result["layers"] = _pipeline_layers(ctx, layer_ops, spark, result)
-    return result
-
-
-def _traced_pipeline_op(ctx, spark, op_id, name, builder, data, llm_stats) -> dict:
-    import sparkstats
-
-    sc = spark.sparkContext
-    tr = ctx.tracer
-    tr.trace_id = op_id
-    sc.setJobGroup(f"op-{op_id}-build", name)
-    last_exec = sparkstats.last_execution_id(spark)
-    llm0 = llm_stats.requests
-    t0 = time.perf_counter()
-    with tr.span("op"):
-        calls0 = ctx.py4j_calls
-        with tr.span("driver.build"):
-            df = builder(spark, data)
-        py4j_build = ctx.py4j_calls - calls0
-        sc.setJobGroup(f"op-{op_id}-exec", name)
-        with tr.span("spark.exec"):
-            force(df)
-    lat = time.perf_counter() - t0
-    build = sparkstats.group_stage_totals(spark, f"op-{op_id}-build")
-    execd = sparkstats.group_stage_totals(spark, f"op-{op_id}-exec")
+    retained = sparkstats.jvm_retained_mb(spark) if ctx.trace else None
     return {
-        "kind": name, "latency_s": lat, "df": df,
-        "llm_calls": llm_stats.requests - llm0,
-        "summary": tr.op_summary(op_id), "py4j_build": py4j_build,
-        "build_jobs": build["jobs"], "spark_build": build, "spark": execd,
-        "planning_ms": sparkstats.planning_ms(df),
-        "python_udf_s": sparkstats.python_udf_s(spark, last_exec),
+        "loop": loop, "setup": setup, "peak_rss_mb": peak,
+        "retained_mb": retained, "persisted_rdds": persisted,
+        "cleanup_ok": max(persisted, default=0) <= baseline,
+        "probes": None, "llm_cost": cost, "stored": None,
     }
 
 
-def _pipeline_layers(ctx, ops, spark, result) -> dict:
-    import sparkstats
+WORKLOADS = {"olap_sessions": run_sessions, "pipeline_mix": run_pipeline}
 
+
+# ---------------------------------------------------------------------------
+# per-layer metrics of a traced run
+
+
+def layer_metrics(ctx: Context, res: dict) -> dict:
+    """Every per-layer metric from the op records of a traced run.  A
+    layer the workload never enters reads 0."""
+    ops = res["loop"].ops
     n = max(len(ops), 1)
-    lay = {}
 
-    def mean_total(name):
-        return sum(o["summary"].get(name, {}).get("total_s", 0.0) for o in ops) / n
+    def total(span):
+        return sum(o["summary"].get(span, {}).get("total_s", 0.0) for o in ops) / n
 
-    lay["llm.calls_per_op"] = sum(o["llm_calls"] for o in ops) / n
-    lay["driver.build_s"] = mean_total("driver.build")
-    lay["driver.py4j_calls"] = sum(o["py4j_build"] for o in ops) / n
-    lay["driver.eager_jobs"] = sum(o["build_jobs"] for o in ops) / n
-    lay["spark.exec_s"] = mean_total("spark.exec")
-    lay["spark.planning_ms"] = median([o["planning_ms"] for o in ops])
-    lay["spark.python_udf_s"] = sum(o["python_udf_s"] for o in ops) / n
+    def per_op(key):
+        return sum(o.get(key, 0) for o in ops) / n
+
+    probes = res["probes"] or {"probes": 0, "equal": 0, "subset": 0, "llm_calls": 0}
+    n_probes = max(probes["probes"], 1)
+    cost = res["llm_cost"]
+    stored = res["stored"] or {"bytes": 0, "query_ops": 0}
+    sess = [o for o in ops if o["phase"] == "sessions"]
+    lay = {
+        "engine.decompose_s": total("engine.decompose"),
+        "engine.plan_filter_s": total("engine.plan_filter"),
+        "plans.memory.probe_s": total("plans.memory.probe"),
+        "plans.memory.probe_llm_calls": probes["llm_calls"] / n,
+        "plans.memory.hit_ratio": probes["equal"] / n_probes,
+        "plans.memory.subset_ratio": probes["subset"] / n_probes,
+        "plans.memory.evictions": per_op("evictions"),
+        "plans.memory.cached_mb": median([o["cached_mb"] for o in ops]),
+        "plans.memory.checkpoint_s": total("plans.memory.checkpoint"),
+        "plans.memory.checkpoint_bytes": stored["bytes"] / max(stored["query_ops"], 1),
+        "plans.memory.load_s": total("plans.memory.load"),
+        "plans.planner.inject_s": total("plans.planner.inject"),
+        "plans.planner.eager_jobs": per_op("inject_jobs"),
+        "plans.planner.topk_s": total("plans.planner.topk"),
+        "plans.executor.build_s": total("plans.executor.build"),
+        "plans.rollup.roll_up_s": total("plans.rollup.roll_up"),
+        "plans.rollup.drill_down_s": total("plans.rollup.drill_down"),
+        "llm.requests": cost["llm_requests"] / n,
+        "llm.cache_hit_ratio": (1 - cost["llm_backend_calls"] / cost["llm_requests"]
+                                if cost["llm_requests"] else 0.0),
+        "llm.calls_per_op": per_op("llm_calls"),
+        "llm.driver_calls": per_op("llm_driver_calls"),
+        "llm.backend_busy_s": per_op("llm_busy_s"),
+        "llm.inflight_mean": median([o["llm_area"] / o["llm_busy_wall"] for o in ops
+                                     if o.get("llm_busy_wall")]),
+        "llm.pipelining_ratio": (
+            sum(o["llm_endpoint_calls"] for o in sess) * LLM_LATENCY_S
+            / sum(o["latency_s"] for o in sess) if sess else 0.0),
+        "spark.exec_s": total("spark.exec"),
+        "spark.planning_ms": median([o["planning_ms"] for o in ops
+                                     if o["planning_ms"] is not None]),
+        "spark.python_udf_s": per_op("python_udf_s"),
+        "spark.persisted_rdds": float(res["persisted_rdds"][-1]),
+        "driver.build_s": total("driver.build"),
+        "driver.py4j_calls": per_op("py4j_build"),
+        "driver.eager_jobs": sum(o["build_jobs"] for o in ops
+                                 if o["phase"] == "pipeline") / n,
+        "sources.load_s": res["setup"]["load_s"],
+    }
+    # worker calls: backend calls that did not come from the driver
+    lay["llm.worker_calls"] = max(lay["llm.calls_per_op"] - lay["llm.driver_calls"], 0.0)
     for key in ("jobs", "stages", "tasks", "executor_run_s",
                 "shuffle_write_mb", "input_mb", "spill_mb"):
-        lay[f"spark.{key}"] = sum(
-            o["spark"][key] + o["spark_build"][key] for o in ops) / n
-    lay["spark.persisted_rdds"] = float(sparkstats.persisted_rdds(spark))
+        lay[f"spark.{key}"] = sum(o["spark"][key] for o in ops) / n
     # build/exec split per family: build = the family's own spans
     # (self time, nested calls into other families excluded) during the
     # builder call; exec = the forcing time of every row whose build
     # called into the family
     for fam in FAMILIES:
-        b = sum(o["summary"].get(fam, {}).get("self_s", 0.0) for o in ops) / n
-        e = sum(o["summary"].get("spark.exec", {}).get("total_s", 0.0)
-                for o in ops if fam in o["summary"]) / n
-        lay[f"{fam}.build_s"] = b
-        lay[f"{fam}.exec_s"] = e
-    _add_common_trace(ctx, lay, ops, result)
+        lay[f"{fam}.build_s"] = sum(
+            o["summary"].get(fam, {}).get("self_s", 0.0) for o in ops) / n
+        lay[f"{fam}.exec_s"] = sum(
+            o["summary"].get("spark.exec", {}).get("total_s", 0.0)
+            for o in ops if fam in o["summary"]) / n
+    for kind in KINDS:
+        lay[f"ops.{kind}_p50_s"] = median(
+            [o["latency_s"] for o in ops if o["kind"] == kind])
+    gaps = [abs(o["latency_s"] - sum(v["self_s"] for v in o["summary"].values()))
+            for o in ops]
+    lay["trace.self_time_gap_s"] = max(gaps, default=0.0)
+    lay["trace.overhead_per_op_s"] = ctx.tracer.overhead_s / n
     return lay
-
-
-WORKLOADS = {"olap_sessions": run_sessions, "pipeline_mix": run_pipeline}
 
 
 # ---------------------------------------------------------------------------
@@ -861,6 +868,8 @@ WORKLOADS = {"olap_sessions": run_sessions, "pipeline_mix": run_pipeline}
 
 def run(workload: str, seed: int, seconds: float, trace: bool, work: str,
         root: str, spans_path: str | None) -> dict:
+    with open(os.path.join(root, "BENCHMARK.json")) as fh:
+        bench = json.load(fh)
     os.makedirs(os.path.join(work, "tmp"), exist_ok=True)
     nproc = len(os.sched_getaffinity(0))
     here = os.path.dirname(os.path.abspath(__file__))
@@ -885,57 +894,65 @@ def run(workload: str, seed: int, seconds: float, trace: bool, work: str,
     if env["contended"]:
         log(f"CONTENDED run: 1-min loadavg {env['loadavg_start']:.2f} -> "
             f"{env['loadavg_end']:.2f} exceeds nproc {nproc}")
-    lats = [o["latency_s"] for o in res["ops"]]
+    loop = res["loop"]
+    lats = [o["latency_s"] for o in loop.ops]
     n = len(lats)
+    timed = loop.timed_s()
     tail_p = tail_rule(n)
     by_kind: dict[str, list[float]] = {}
-    for o in res["ops"]:
+    for o in loop.ops:
         by_kind.setdefault(o["kind"], []).append(o["latency_s"])
-    err = error_rate(res["attempted"], res["failed"], res["mismatched"])
+    llm_calls_per_op = sum(o["llm_calls"] for o in loop.ops) / n if n else 0.0
     info = {
         "workload": workload, "seed": seed, "env": env, "ops": n,
-        "timed_wall_s": res["timed_wall_s"],
+        "timed_wall_s": timed,
         "setup_wall_s": res["setup"]["wall_s"],
         "latency_p50_s": percentile(lats, 50) if n else None,
         "latency_p90_s": percentile(lats, 90) if n else None,
-        "ops_per_s": n / res["timed_wall_s"] if n else None,
+        "ops_per_s": n / timed if n else None,
         "peak_rss_mb": res["peak_rss_mb"],
         "retained_mb": res["retained_mb"],
         "latency_p90_samples_beyond": samples_beyond(n, 90) if n else 0,
         "tail_rule_percentile": tail_p,
         "latency_tail_s": percentile(lats, tail_p) if tail_p else None,
-        "error_rate": err,
+        "error_rate": error_rate(loop.attempted, loop.failed, loop.mismatched),
+        "ops_by_kind": {k: len(v) for k, v in sorted(by_kind.items())},
         "p50_by_kind": {k: median(v) for k, v in sorted(by_kind.items())},
-        "llm_calls_per_op": (
-            sum(o.get("llm_calls", 0) for o in res["ops"]) / n if n else 0.0),
-        "persisted_rdds_per_session": res.get("persisted_rdds"),
+        "llm_calls_per_op": llm_calls_per_op,
+        "stored_bytes": res["stored"],
+        "persisted_rdds": res["persisted_rdds"],
         "cleanup_ok": res["cleanup_ok"],
-        "op_latencies_s": [[o["kind"], round(o["latency_s"], 4)] for o in res["ops"]],
+        "op_latency_cpu_s": [[o["kind"], round(o["latency_s"], 4), round(o["cpu_s"], 3)]
+                             for o in loop.ops],
     }
     log("run " + json.dumps(info))
     if trace:
-        lay = res["layers"]
-        lay["wall.setup_s"] = res["setup"]["wall_s"]
-        lay["wall.latency_p50_s"] = info["latency_p50_s"]
-        lay["wall.latency_p90_s"] = info["latency_p90_s"]
-        lay["wall.ops_per_s"] = info["ops_per_s"]
-        lay["mem.peak_rss_mb"] = res["peak_rss_mb"]
-        lay["mem.retained_mb"] = res["retained_mb"]
-        metrics = {k: {"value": float(lay.get(k, 0.0)), "unit": per_layer_unit(k)}
-                   for k in PER_LAYER}
+        values = layer_metrics(ctx, res)
+        values["wall.setup_s"] = res["setup"]["wall_s"]
+        values["wall.latency_p50_s"] = info["latency_p50_s"]
+        values["wall.latency_p90_s"] = info["latency_p90_s"]
+        values["wall.ops_per_s"] = info["ops_per_s"]
+        values["mem.peak_rss_mb"] = res["peak_rss_mb"]
+        values["mem.retained_mb"] = res["retained_mb"]
+        listed = bench["per_layer"]
         if spans_path:
             with open(spans_path, "w") as fh:
                 json.dump(ctx.tracer.dump(), fh)
     else:
-        metrics = {
-            "setup_s": {"value": res["setup"]["cpu_s"], "unit": "s"},
-            "cpu_s_per_op": {"value": res["cpu_s"] / n, "unit": "s/op"},
-            "llm_calls_per_op": {"value": info["llm_calls_per_op"], "unit": "calls/op"},
-        }
-    failed = res["failed"] + res["mismatched"]
+        values = {"setup_s": res["setup"]["cpu_s"],
+                  "cpu_s_per_op": loop.cpu_s / n if n else 0.0,
+                  "llm_calls_per_op": llm_calls_per_op}
+        listed = bench["end_to_end"]
+    names = [m["name"] for m in listed]
+    if set(names) != set(values):
+        raise RuntimeError(
+            f"metrics of BENCHMARK.json not produced: {sorted(set(names) - set(values))}; "
+            f"produced but not listed: {sorted(set(values) - set(names))}")
+    failed = loop.failed + loop.mismatched
     return {
         "correct": failed == 0 and res["cleanup_ok"],
-        "attempted": res["attempted"],
+        "attempted": loop.attempted,
         "failed": failed,
-        "metrics": metrics,
+        "metrics": {m["name"]: {"value": float(values[m["name"]]), "unit": m["unit"]}
+                    for m in listed},
     }

@@ -1,4 +1,5 @@
-"""The ``olap_sessions`` workload: seeded progressive OLAP sessions.
+"""The sessions of the ``olap_sessions`` workload: seeded progressive
+OLAP sessions (the workload's churn round is in ``churn``).
 
 A session is one new ``OlapEngine`` over the documents table and a
 fixed op script in the form of the reference corpus's progressive
@@ -12,16 +13,16 @@ queries:
 5. ``hit``     seven revisits of A, A' and B, four of them reworded (an
    Equal hit by the LLM relation judgment rather than by equal text).
 
-Seven of twelve ops are hits, so the median op is a hit well inside
-the hit band; the two fresh filters are the slowest ops, so the 90th
-percentile is nine-tenths a fresh filter.  A third analysis (top-k)
-would push both percentiles onto the border between two op types, so
-the session leaves it out; top-k intent detection still runs inside
-every analysis op.
+Seven of twelve ops are hits, so the median op of a session is a hit
+well inside the hit band; the two fresh filters are the slowest ops,
+so its 90th percentile is nine-tenths a fresh filter.  A third
+analysis (top-k) would push both percentiles onto the border between
+two op types, so the session leaves it out; top-k intent detection
+still runs inside every analysis op.
 
-The workload draws topic words whose document frequency is within a
-narrow band of the median, so each fresh filter judges about the same
-number of rows whatever the seed.
+Every topic word lands in the same number of documents (see
+``datagen``), so each fresh filter keeps the same number of rows
+whatever the seed.
 """
 
 from __future__ import annotations
@@ -48,17 +49,11 @@ def topic_stats(docs_rows) -> dict[str, list[int]]:
     return out
 
 
-def pick_topics(stats: dict[str, list[int]], rng: random.Random, k: int,
-                band: float = 0.08) -> list[str]:
-    """``k`` distinct topic words whose document frequency lies within
-    ``band`` of the median frequency, in seeded order."""
-    freqs = sorted(len(v) for v in stats.values())
-    mid = freqs[len(freqs) // 2]
-    ok = sorted(w for w, v in stats.items() if abs(len(v) - mid) <= band * mid)
-    if len(ok) < k:
-        ok = sorted(stats, key=lambda w: (abs(len(stats[w]) - mid), w))[:k]
-    rng.shuffle(ok)
-    return ok[:k]
+def pick_topics(stats: dict[str, list[int]], rng: random.Random, k: int) -> list[str]:
+    """``k`` distinct topic words in seeded order."""
+    words = sorted(stats)
+    rng.shuffle(words)
+    return words[:k]
 
 
 def _threshold(n_chars: list[int]) -> int:
@@ -111,6 +106,8 @@ def generate(seed: int, stats: dict[str, list[int]], n_sessions: int) -> list[li
 
 
 def warmup_queries(script: list[dict]) -> list[str]:
-    """The untimed warm-up: the script's non-hit ops, so every op path
-    the timed session takes has run once."""
-    return [op["query"] for op in script if op["kind"] != "hit"]
+    """The untimed warm-up: the script's ops before its second fresh
+    filter (a fresh filter, the refine and both analyses), so every op
+    path of the timed session has run once."""
+    second_fresh = [i for i, op in enumerate(script) if op["kind"] == "fresh"][1]
+    return [op["query"] for op in script[:second_fresh]]

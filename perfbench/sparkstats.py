@@ -1,7 +1,7 @@
 """Spark-side counters read through py4j, with no UI or REST endpoint:
 job groups, the status store's stage data and query planning phases
-(traced run), and persisted RDDs, Java-thread CPU and retained heap
-(every run)."""
+(traced run), persisted RDDs (every run) and retained heap (traced
+run)."""
 
 from __future__ import annotations
 
@@ -115,14 +115,6 @@ def _parse_timing_s(text: str) -> float:
         return float(parts[0].replace(",", "")) * _UNITS.get(parts[1], 0.0)
     except ValueError:
         return 0.0
-
-
-def jvm_thread_cpu_s(spark) -> float:
-    """CPU seconds of the JVM's live Java threads (task, scheduler and
-    py4j threads).  JIT-compiler and GC threads are not Java threads
-    and are left out."""
-    mx = spark.sparkContext._jvm.java.lang.management.ManagementFactory.getThreadMXBean()
-    return sum(max(mx.getThreadCpuTime(t), 0) for t in mx.getAllThreadIds()) / 1e9
 
 
 def jvm_retained_mb(spark, reads: int = 3) -> float:

@@ -70,6 +70,31 @@ def tree_cpu_by_process(root: int | None = None) -> dict[int, float]:
     return out
 
 
+# native names of the JVM's own threads (JIT compilers, garbage
+# collectors, the VM thread), as /proc shows them: 15 characters at most
+JVM_INTERNAL_THREADS = ("C1 CompilerThre", "C2 CompilerThre", "GC Thread#",
+                        "G1 ", "VM Thread", "VM Periodic Tas", "Sweeper thread",
+                        "Monitor Deflati")
+
+
+def jvm_internal_cpu_s(pid: int) -> float:
+    """User + system CPU seconds of the live JIT-compiler, GC and VM
+    threads of the JVM ``pid``."""
+    total = 0
+    for tid in os.listdir(f"/proc/{pid}/task"):
+        try:
+            with open(f"/proc/{pid}/task/{tid}/comm") as fh:
+                name = fh.read().strip()
+            if not name.startswith(JVM_INTERNAL_THREADS):
+                continue
+            with open(f"/proc/{pid}/task/{tid}/stat") as fh:
+                fields = fh.read().rsplit(")", 1)[1].split()
+            total += int(fields[11]) + int(fields[12])
+        except (OSError, IndexError, ValueError):
+            continue
+    return total * _TICK_S
+
+
 def tree_cpu_s(root: int | None = None) -> float:
     """User + system CPU seconds of ``root`` and its descendants."""
     return sum(tree_cpu_by_process(root).values())

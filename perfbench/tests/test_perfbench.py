@@ -11,6 +11,7 @@ import pandas as pd
 import pyarrow.parquet as pq
 import pytest
 
+import churn
 import datagen
 import oracle
 import sessions
@@ -57,7 +58,7 @@ def test_session_script_shape(tmp_path):
     words = [s[0]["tokens"][1] for s in scripts] + [s[4]["tokens"][1] for s in scripts]
     assert len(set(words)) == len(words)
     assert [op["analysis"] for op in scripts[1] if op["kind"] == "analyze"] == ["group", "extract"]
-    assert len(sessions.warmup_queries(scripts[0])) == 5
+    assert sessions.warmup_queries(scripts[0]) == [op["query"] for op in scripts[0][:4]]
 
 
 def test_percentile_matches_numpy():
@@ -161,18 +162,53 @@ def test_pipeline_check_uses_replay_hashing():
     assert not oracle.pipeline_check(Frame(bad), expected)[0]
 
 
-def test_benchmark_json_matches_harness():
-    import json
-    import os
+def test_churn_rounds_repeat_per_seed_and_follow_lru(tmp_path):
+    _, st = _stats(tmp_path, 11)
+    rounds = churn.generate(11, st, 5)
+    assert rounds == churn.generate(11, st, 5)
+    assert [op["kind"] for op in rounds[0]] == ["fresh"] * churn.CACHE_NODES + ["reopen"]
+    for r in rounds[1:]:
+        assert tuple(op["kind"] for op in r[:-1]) == churn.ROUND
+        assert r[-1]["kind"] == "reopen"
+    # replay the plan on a least-recently-used cache of CACHE_NODES
+    # frames: a fresh filter adds a cached node and evicts the least
+    # recently used one; a hit on a cached node refreshes it; a
+    # revisit of an evicted node recomputes it without caching it
+    cached: list[str] = []
+    seen = set()
+    for r in rounds:
+        for op in r[:-1]:
+            q = op["query"]
+            if op["kind"] == "fresh":
+                assert q not in seen
+                seen.add(q)
+                cached = [q] + cached[:churn.CACHE_NODES - 1]
+            elif op["kind"] == "hit":
+                assert q in cached
+                cached = [q] + [c for c in cached if c != q]
+            else:
+                assert q in seen and q not in cached
+        assert r[-1]["query"] in seen
+
+
+def test_pipeline_rows_reach_every_family():
+    import inspect
+    import re
+
+    import __spark_entry__ as entry
 
     import harness
 
-    root = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    with open(os.path.join(root, "BENCHMARK.json")) as fh:
-        bench = json.load(fh)
-    assert {w["name"] for w in bench["workloads"]} == set(harness.WORKLOADS)
-    assert [m["name"] for m in bench["per_layer"]] == list(harness.PER_LAYER)
-    for m in bench["per_layer"]:
-        assert m["unit"] == harness.per_layer_unit(m["name"])
-    assert [m["name"] for m in bench["end_to_end"]] == list(harness.END_TO_END)
-    assert all(m["bound"] <= 0.25 for m in bench["end_to_end"])
+    registry, oracles = entry.queries(), entry.oracle_sql()
+    reached = set()
+    for name in harness.PIPELINE_ROWS:
+        assert name in registry and name in oracles, name
+        src = inspect.getsource(registry[name])
+        reached |= {f for f in harness.FAMILIES if re.search(
+            rf"from semantic_olap_spark\.{re.escape(f)} import", src)}
+    assert reached == set(harness.FAMILIES)
+
+
+def test_topic_words_have_equal_document_counts(tmp_path):
+    _, st = _stats(tmp_path, 12)
+    assert {len(v) for v in st.values()} == {round(0.2 * 500)}
