@@ -13,12 +13,16 @@ Re-implements the reference's two-level cube structure
    optional aggregated result (Granularity_View, OLAP_Memory.py:69-77).
 
 Spark realization: node data are cached DataFrames (unpersisted on
-eviction); the lattice itself is driver-side metadata.  Reuse
-semantics (OLAP_Memory.py:160-187 — the LLM classifies
+eviction); the lattice itself is driver-side metadata.  A node whose
+frame has been checkpointed (``save_cube`` /
+``save_cube_incremental``) is re-read from its checkpoint after
+eviction instead of re-running its filters — the reference's nodes
+are eager frames, so a revisit never pays the LLM verdicts twice.
+Reuse semantics (OLAP_Memory.py:160-187 — the LLM classifies
 Equal/Subset/...):
 
 - an *exact* structural fast-path (normalized query text match ⇒
-  Equal; plan-prefix ⇒ Subset) runs first and is deterministic;
+  Equal) runs first, over every node, and is deterministic;
 - an optional ``classify`` hook (query_a, query_b) → one of
   ``Equal/Subset/Contain/Intersect/No_relation`` plugs in the LLM
   judgment for the semantic cases.
@@ -126,6 +130,19 @@ class ColViews:
         return list(self.granularities)
 
 
+class _NodeScan:
+    """Loader of the node frame checkpointed at cube ``path``'s
+    ``nodes/<dir_id>``: a plain parquet scan — disk-backed, pushdown
+    on reuse, no LLM work and no persisted RDD."""
+
+    def __init__(self, spark, fs, path: str, dir_id: int):
+        self.spark = spark
+        self.node_dir = fs.spark_path(f"{path}/nodes/{dir_id}")
+
+    def __call__(self) -> DataFrame:
+        return self.spark.read.parquet(self.node_dir)
+
+
 class CubeNode:
     """A materialized filtered subset (Cube_node, OLAP_Memory.py:106-118).
 
@@ -134,7 +151,13 @@ class CubeNode:
     touched, at which point the loader (a disk scan) resolves it.
     Opening a saved thousands-of-nodes lattice therefore costs one
     manifest read, not one parquet-footer job per node; lattice
-    probes (``get_current_node`` classify calls) are metadata-only."""
+    probes (``get_current_node`` classify calls) are metadata-only.
+
+    A checkpoint written by ``save_cube`` / ``save_cube_incremental``
+    gives a live node the same loader, so :meth:`release` drops the
+    frame and a revisit re-reads the checkpoint.  Assigning ``.df``
+    clears the loader: a replaced frame (e.g. ``drill_down``'s extra
+    column) is no longer what the checkpoint holds."""
 
     _ids = itertools.count()
 
@@ -178,6 +201,7 @@ class CubeNode:
     @df.setter
     def df(self, value: DataFrame) -> None:
         self._df = value
+        self._loader = None
 
     @property
     def is_loaded(self) -> bool:
@@ -200,8 +224,9 @@ class CubeNode:
         except Exception:
             pass
         if self._loader is not None:
-            # loader-backed frame: drop the scan object too, so a
-            # released catalog node returns to pure metadata
+            # loader-backed (catalog or checkpointed) frame: drop it,
+            # so the node returns to pure metadata and a revisit
+            # re-reads the checkpoint instead of recomputing
             self._df = None
 
 
@@ -211,10 +236,13 @@ class CubeMemory:
     ``max_cached_nodes`` bounds how many non-root nodes may hold a
     *cached* frame at once: past the budget the least-recently-used
     node that is neither the root nor an ancestor of the most recent
-    node is released (``unpersist`` only — metadata and lineage stay,
-    so revisiting an evicted node recomputes the filter correctly).
-    Long sessions therefore don't accumulate persisted frames in
-    executor memory (SCALE.md "Known trade-offs").
+    node is released.  Metadata always stays.  A node checkpointed by
+    ``save_cube`` / ``save_cube_incremental`` is re-read from its
+    checkpoint on revisit (a parquet scan, no LLM calls); a node never
+    checkpointed keeps its lineage and recomputes its filter.  Long
+    sessions therefore don't accumulate persisted frames in executor
+    memory (SCALE.md "Known trade-offs"), and — as in catalog mode —
+    a live session's cube directory must outlive the session.
     """
 
     def __init__(
@@ -294,9 +322,9 @@ class CubeMemory:
             self.nodes[child].parents.append(parent)
 
     def relation(self, new_query: str, node: CubeNode) -> Relation:
-        """Structural fast-path, then the pluggable (LLM) classifier."""
-        if _norm_query(new_query) == _norm_query(node.query):
-            return "Equal"
+        """The pluggable (LLM) classifier; ``No_relation`` without one.
+        Equal query text never gets here (``get_current_node``'s fast
+        path)."""
         if self.classify is not None:
             return self.classify(new_query, node.query)
         return "No_relation"
@@ -306,8 +334,15 @@ class CubeMemory:
 
         Returns ``(equal_node, deepest_subset_ancestors)`` — an Equal
         hit means full reuse; Subset ancestors are the starting data
-        for incremental delta filtering (SURVEY.md §4 rewrite 5).
+        for incremental delta filtering (SURVEY.md §4 rewrite 5).  A
+        node with the same normalized query text is an Equal hit
+        found before the BFS, with no classifier call.
         """
+        key = _norm_query(query)
+        for node in self.nodes.values():
+            if _norm_query(node.query) == key:
+                self.touch(node.id)
+                return node, []
         subset_hits: list[CubeNode] = []
         frontier = [self.root_id]
         seen = set(frontier)
@@ -423,16 +458,35 @@ def save_cube(mem: CubeMemory, path: str) -> None:
     cluster scale wants a transactional table format
     (Delta/Iceberg-style commit protocol); this module deliberately
     does not claim it — serialize writers instead.
+
+    Every non-root node written here is re-read from its checkpoint
+    after a cache eviction (see :class:`CubeMemory`), so the
+    directory must outlive the session that keeps using ``mem``.  A
+    directory that holds incremental checkpoints is refused: their
+    delta manifests would be merged over this save's node ids.
     """
     import json
 
     root_df = mem.nodes[mem.root_id].df
-    fs, path = _cube_fs(path, root_df.sparkSession)
+    spark = root_df.sparkSession
+    fs, path = _cube_fs(path, spark)
+    if _delta_names(fs, path):
+        raise ValueError(
+            f"cube directory {path} holds incremental checkpoints; a "
+            f"full save would leave their delta manifests stale — "
+            f"checkpoint it with save_cube_incremental, or save to a "
+            f"fresh directory"
+        )
     fs.makedirs(path)
     manifest: dict = {"root_id": mem.root_id, "nodes": []}
     for nid, node in mem.nodes.items():
-        node_dir = f"{path}/nodes/{nid}"
-        node.df.write.mode("overwrite").parquet(fs.spark_path(node_dir))
+        scan = _NodeScan(spark, fs, path, nid)
+        if getattr(node._loader, "node_dir", None) != scan.node_dir:
+            # (a node already backed by this very checkpoint is on
+            # disk as-is; Spark cannot overwrite a path it reads)
+            node.df.write.mode("overwrite").parquet(scan.node_dir)
+            if nid != mem.root_id:
+                node._loader = scan
         grans = []
         for col, views in node.col_views.items():
             for gname, g in views.granularities.items():
@@ -505,9 +559,16 @@ def save_cube_incremental(mem: CubeMemory, path: str) -> None:
     base + deltas transparently, and a loaded memory checkpoints
     incrementally right back into the same directory (saved-directory
     ids survive the load's in-memory id reassignment).
+
+    Checkpointed nodes become the lattice's eviction tier: once the
+    cache budget releases one, a revisit re-reads its frame from
+    here (a parquet scan, no LLM calls) instead of recomputing its
+    filters.  As in catalog mode, the directory must therefore
+    outlive the session that keeps using ``mem``.
     """
     root_df = mem.nodes[mem.root_id].df
-    fs, path = _cube_fs(path, root_df.sparkSession)
+    spark = root_df.sparkSession
+    fs, path = _cube_fs(path, spark)
     if not fs.exists(f"{path}/cube.json"):
         save_cube(mem, path)
         return
@@ -528,9 +589,10 @@ def save_cube_incremental(mem: CubeMemory, path: str) -> None:
         dir_id = next_dir
         next_dir += 1
         persisted[nid] = dir_id
-        node.df.write.mode("overwrite").parquet(
-            fs.spark_path(f"{path}/nodes/{dir_id}")
-        )
+        scan = _NodeScan(spark, fs, path, dir_id)
+        node.df.write.mode("overwrite").parquet(scan.node_dir)
+        if nid != mem.root_id:
+            node._loader = scan
         new_ids.append(nid)
     delta_nodes = []
     for nid, node in mem.nodes.items():
@@ -631,7 +693,8 @@ def load_cube(
     granularity catalogs are preserved.  Incremental checkpoints
     (``delta-*.json`` from :func:`save_cube_incremental`) merge in
     transparently, and the returned memory can keep checkpointing
-    incrementally into the same directory.
+    incrementally into the same directory.  Every non-root node keeps
+    its scan as its loader, so an evicted node re-reads it.
 
     ``lazy=True`` is CATALOG MODE for thousands-of-nodes sessions
     (r6 VERDICT #8): only the root frame and the manifest load at
@@ -647,7 +710,7 @@ def load_cube(
     by_old = {int(n["id"]): n for n in manifest["nodes"]}
     root_old = int(manifest["root_id"])
 
-    root_df = spark.read.parquet(fs.spark_path(f"{path}/nodes/{root_old}"))
+    root_df = _NodeScan(spark, fs, path, root_old)()
     mem = CubeMemory(
         root_df, classify=classify, max_cached_nodes=max_cached_nodes
     )
@@ -658,23 +721,12 @@ def load_cube(
     mem.nodes[mem.root_id].query = by_old[root_old]["query"]
     id_map = {root_old: mem.root_id}
 
-    def _node_loader(old_id: int):
-        return lambda: spark.read.parquet(
-            fs.spark_path(f"{path}/nodes/{old_id}")
-        )
-
     for old_id, spec in by_old.items():
         if old_id == root_old:
             continue
-        if lazy:
-            node = CubeNode(
-                spec["query"], None, plan=spec["plan"],
-                loader=_node_loader(old_id),
-            )
-        else:
-            df = spark.read.parquet(fs.spark_path(f"{path}/nodes/{old_id}"))
-            node = CubeNode(spec["query"], df, plan=spec["plan"],
-                            cache=False)
+        scan = _NodeScan(spark, fs, path, old_id)
+        node = CubeNode(spec["query"], None if lazy else scan(),
+                        plan=spec["plan"], cache=False, loader=scan)
         mem.nodes[node.id] = node
         id_map[old_id] = node.id
 

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from semantic_olap_spark.plans.memory import (
@@ -260,3 +261,131 @@ def test_catalog_mode_scales(tables, spark, tmp_path):
     # the structural guarantee is the assertion above (zero loads);
     # the wall-clock bound is a generous sanity ceiling, not a bench
     assert open_sec < 10.0
+
+
+# ---------------------------------------------------------------------------
+# checkpoints as the eviction tier: a released checkpointed node re-reads
+# its frame from disk instead of re-running its LLM filters
+
+
+def _sem_filter_lattice(tables, spark):
+    from semantic_olap_spark.llm.client import StubLLM, wrap_cost_tracking
+    from semantic_olap_spark.operators.semantic import sem_filter
+
+    factory, stats = wrap_cost_tracking(spark, StubLLM)
+    mem = CubeMemory(tables["documents"].select("doc_id", "text"),
+                     max_cached_nodes=1)
+    root = mem.nodes[mem.root_id]
+    node = mem.add_node(
+        "mentions spark", sem_filter(root.df, ["text"], "spark", factory),
+        [{"operator_name": "sem_filter"}], [mem.root_id],
+    )
+    want = sorted(r["doc_id"] for r in node.df.collect())
+    assert want and stats.backend_calls > 0
+    return mem, node, want, factory, stats
+
+
+def _evict(mem):
+    """Add a second node: with a budget of one cached node the LRU
+    node (the sem_filter one) is released."""
+    root = mem.nodes[mem.root_id]
+    other = mem.add_node(
+        "mentions window", root.df.filter(F.col("text").contains("window")),
+        [], [mem.root_id],
+    )
+    other.df.count()
+
+
+def _revisit(mem, query, stats):
+    before = stats.backend_calls
+    node, _ = mem.get_current_node(query)
+    rows = sorted(r["doc_id"] for r in node.df.collect())
+    return node, rows, stats.backend_calls - before
+
+
+def test_evicted_checkpointed_node_rereads_checkpoint(tables, spark, tmp_path):
+    from semantic_olap_spark.plans.memory import save_cube_incremental
+
+    mem, node, want, _, stats = _sem_filter_lattice(tables, spark)
+    save_cube_incremental(mem, str(tmp_path / "cube"))
+    _evict(mem)
+    assert not node.is_loaded  # released back to metadata
+
+    hit, rows, calls = _revisit(mem, "mentions spark", stats)
+    assert hit is node
+    assert rows == want
+    assert calls == 0  # a parquet scan, not the sem_filter UDF
+    assert not hit.df.is_cached  # and no new persisted frame
+    plan = hit.df._jdf.queryExecution().executedPlan().toString()
+    assert "FileScan parquet" in plan
+
+
+def test_evicted_node_without_checkpoint_recomputes(tables, spark):
+    mem, node, want, _, stats = _sem_filter_lattice(tables, spark)
+    _evict(mem)
+    assert not node.df.is_cached
+
+    hit, rows, calls = _revisit(mem, "mentions spark", stats)
+    assert hit is node
+    assert rows == want
+    assert calls > 0  # lineage recompute re-runs the sem_filter
+
+
+def test_drilled_checkpointed_node_keeps_column_after_eviction(
+        tables, spark, tmp_path):
+    from semantic_olap_spark.plans.memory import save_cube_incremental
+    from semantic_olap_spark.plans.rollup import drill_down
+
+    mem, node, want, factory, _ = _sem_filter_lattice(tables, spark)
+    save_cube_incremental(mem, str(tmp_path / "cube"))
+    drill_down(mem, node.id, "topic",
+               "dominant topic, one of: vector, stream, window",
+               llm_factory=factory)
+    _evict(mem)
+
+    assert "topic" in node.df.columns  # not the pre-drill checkpoint
+    assert sorted(r["doc_id"] for r in node.df.collect()) == want
+
+
+def test_catalog_node_keeps_drilled_column_after_release(
+        tables, spark, tmp_path):
+    from semantic_olap_spark.plans.rollup import drill_down
+
+    mem, _ = _build(tables)
+    d = str(tmp_path / "cube_catalog_drill")
+    save_cube(mem, d)
+    mem2 = load_cube(spark, d, lazy=True)
+    node = next(n for n in mem2.nodes.values() if n.id != mem2.root_id)
+    drill_down(mem2, node.id, "topic",
+               "dominant topic, one of: vector, stream, window")
+    node.release()
+    assert "topic" in node.df.columns
+
+
+def test_full_save_over_own_checkpoint(tables, spark, tmp_path):
+    # a second full save into the same directory after an eviction:
+    # the released node is backed by the very frame being saved
+    mem, node, want, _, stats = _sem_filter_lattice(tables, spark)
+    d = str(tmp_path / "cube_twice")
+    save_cube(mem, d)
+    _evict(mem)
+    save_cube(mem, d)
+    assert sorted(r["doc_id"] for r in node.df.collect()) == want
+    mem2 = load_cube(spark, d)
+    _, rows, _ = _revisit(mem2, "mentions spark", stats)
+    assert rows == want
+
+
+def test_full_save_refuses_incremental_directory(tables, spark, tmp_path):
+    from semantic_olap_spark.plans.memory import save_cube_incremental
+
+    mem, _ = _build(tables)
+    d = str(tmp_path / "cube_mixed")
+    save_cube_incremental(mem, d)
+    root = mem.nodes[mem.root_id]
+    mem.add_node("mentions join",
+                 root.df.filter(F.col("text").contains("join")),
+                 [], [mem.root_id])
+    save_cube_incremental(mem, d)  # writes a delta manifest
+    with pytest.raises(ValueError, match="incremental checkpoints"):
+        save_cube(mem, d)

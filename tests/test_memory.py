@@ -136,3 +136,30 @@ def test_lru_eviction_past_budget_and_revisit(tables):
     node, _ = mem.get_current_node("spark docs")
     assert node is a
     assert node.df.count() == a_rows
+
+
+def test_exact_text_revisit_skips_classifier(tables):
+    calls = []
+
+    def classify(new_q, node_q):
+        calls.append((new_q, node_q))
+        return "Equal" if "pyspark" in new_q and node_q == "spark docs" \
+            else "No_relation"
+
+    mem = CubeMemory(tables["documents"], classify=classify)
+    root = mem.nodes[mem.root_id]
+    a = mem.add_node(
+        "spark docs", root.df.filter(F.col("text").contains("spark")),
+        [], [mem.root_id],
+    )
+    mem.add_node(
+        "window docs", root.df.filter(F.col("text").contains("window")),
+        [], [mem.root_id],
+    )
+    node, _ = mem.get_current_node("Spark  DOCS")
+    assert node is a
+    assert calls == []  # equal normalized text: no classifier call
+    # a reworded query still goes through the classifier
+    node, _ = mem.get_current_node("pyspark documents")
+    assert node is a
+    assert calls and all(q == "pyspark documents" for q, _ in calls)
